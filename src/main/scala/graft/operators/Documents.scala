@@ -822,8 +822,8 @@ object Documents {
   /** Shared build body for the dir-keyed and frame-keyed ensures. */
   private def simhashBuild(s: SparkSession, docs: DataFrame, table: String,
       meta: Seq[(String, Long)], force: Boolean): String = {
-    // Evaluated only when the ensure decides to BUILD (ensureWith's
-    // compute is by-name and the aux thunk fires after it):
+    // Evaluated only when the ensure decides to BUILD (artifact frames
+    // are by-name, and the _pairs writer runs before the _sigs one):
     lazy val sim = {
       // The build input is a pure-Catalyst plan over the documents
       // parquet — exactly the plan d02/d03/d05/Curation retain as
@@ -848,7 +848,9 @@ object Documents {
       // fold upstream (78.5 s isolated at sf0.1 in the pre-kernel form)
       graft.CacheRegistry.retain("neardup.simhash", simhashSigsOf(docs))
     }
-    graft.plans.PersistedIndex.ensureWith(s, table, meta, force,
+    val P = graft.plans.PersistedIndex
+    P.ensure(s, table, meta, force)(
+      P.table("_pairs")(simhashPairsFrom(sim)),
       // _sigs persists the BANDED rows kb-CLUSTERED (range-partitioned
       // and sorted on kb, see [[sigBandRows]]) in a flat path-addressed
       // directory: append-time resident probes prune on parquet
@@ -858,14 +860,13 @@ object Documents {
       // was d11's single largest cost (r19 verdict #2). No explicit
       // file count: AQE coalesces the range exchange from the input
       // size (scale-adaptive, not a local[32] constant).
-      aux = Seq("_sigs" -> (() =>
-        sigBandRows(sim).repartitionByRange(col("kb")).sortWithinPartitions("kb"))),
-      auxPath = Set("_sigs"))(simhashPairsFrom(sim))
+      P.path(s, "_sigs")(
+        sigBandRows(sim).repartitionByRange(col("kb")).sortWithinPartitions("kb")))
+    P.location(s, table, "_pairs")
   }
 
-  /** Build-once persisted simhash near-dup index — the
-    * [[graft.operators.Embeddings.buildPqIndex]] pattern for the d04
-    * family: verified pairs in `graft_index.simhash_<dir>_pairs`, the
+  /** Build-once persisted simhash near-dup index for the d04 family:
+    * verified pairs in `graft_index.simhash_<dir>_pairs`, the
     * per-doc signature history in `_sigs` (what [[appendToSimhashIndex]]
     * probes), a corpus fingerprint in `_meta` (invalidated first,
     * rewritten last), freshness decided from the warehouse LOCATION so
@@ -905,9 +906,8 @@ object Documents {
     * reads `_meta` and refuses unless it matches, so a retried append
     * (crash after the `_pairs` append, before `_sigs`) hits the poison
     * sentinel instead of silently appending the identical pairs a
-    * second time and re-stamping them durably fresh — mirrors
-    * [[graft.operators.Embeddings.appendToPqIndex]], which never
-    * re-stamps freshness it didn't verify. At 100 TB with
+    * second time and re-stamping them durably fresh (the shared
+    * [[graft.plans.PersistedIndex.requireBase]] check). At 100 TB with
     * daily ingest this turns the dominant recurring cost (a full d00
     * rebuild per batch) into work proportional to the delta. */
   def appendToSimhashIndex(s: SparkSession, newDocs: DataFrame, table: String,
@@ -922,24 +922,13 @@ object Documents {
     // hashing, unconditionally (cost: one shingle re-derivation for
     // later plan-matched callers, paid only on appends).
     graft.CacheRegistry.release("neardup.shingles")
-    val metaLoc = P.location(s, table, "_meta")
-    val stored =
-      try s.read.parquet(metaLoc).select($"n", $"fp").head()
-      catch {
-        // absent/zero-row/old-schema _meta → there is nothing verified
-        // to append to; transient I/O propagates as itself
-        case e @ (_: org.apache.spark.sql.AnalysisException |
-                  _: java.util.NoSuchElementException) =>
-          throw new IllegalStateException(
-            s"graft_index.$table has no readable _meta — nothing verified to " +
-              "append to. Run ensureSimhashIndex to build first.", e)
-      }
-    require(stored.getLong(0) == base._1 && stored.getLong(1) == base._2,
-      s"appendToSimhashIndex($table): resident _meta (n=${stored.getLong(0)}, " +
-        s"fp=${stored.getLong(1)}) does not match the expected base " +
-        s"(n=${base._1}, fp=${base._2}) — the index is poisoned, mid-append, " +
-        "or built from a different corpus. Appending would duplicate or " +
-        "orphan pairs; run ensureSimhashIndex to rebuild instead.")
+    P.requireBase(s, table, Seq("n" -> base._1, "fp" -> base._2),
+      "appendToSimhashIndex",
+      unreadable = s"graft_index.$table has no readable _meta — nothing " +
+        "verified to append to. Run ensureSimhashIndex to build first.",
+      mismatch = "— the index is poisoned, mid-append, or built from a " +
+        "different corpus. Appending would duplicate or orphan pairs; run " +
+        "ensureSimhashIndex to rebuild instead.")
     // refuse the r19 hive-partitioned _sigs loudly BEFORE reading it:
     // the read itself would succeed (kb surfaces as a partition column),
     // but this append writes flat kb-clustered files, and mixing those
@@ -961,8 +950,8 @@ object Documents {
         // only the NOT-FOUND / wrong-column shape means "old layout,
         // rebuild to migrate" (a pre-r19 _sigs lacks the banded i/k/kb
         // columns and fails the select the same way a missing table
-        // does); transient I/O must propagate as itself (the
-        // appendToPqIndex rationale)
+        // does); transient I/O must propagate as itself (the miss-shape
+        // rule of the shared PersistedIndex freshness probe)
         case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalStateException(
             s"graft_index.$table has no persisted signature table in the " +
@@ -970,13 +959,7 @@ object Documents {
               "r19 band-partitioned revision. Run ensureSimhashIndex once to " +
               "migrate (the freshness probe requires _sigs and will rebuild).", e)
       }
-    def diag[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("SPARK_GRAFT_DIAG"))
-        println(f"[append-diag] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
+    def diag[A](stage: String)(f: => A): A = graft.util.Timed.diag("append-diag", stage)(f)
     val newSigs = diag("newSigs localCheckpoint")(simhashSigsOf(newDocs).localCheckpoint())
     try {
       val newBand = sigBandRows(newSigs)
@@ -1031,7 +1014,7 @@ object Documents {
       // row-group stats (the pruning the r19 hive directories gave) —
       // the append commits a few flat files instead of ≤64 directory
       // entries (the commit constant that dominated d11)
-      P.appendTablePath(
+      P.appendTable(
         newBand.repartitionByRange(col("kb")).sortWithinPartitions("kb"),
         table, "_sigs"))
       diag("stamp")(P.stamp(s, table, Seq("n" -> grown._1, "fp" -> grown._2)))

@@ -1431,9 +1431,6 @@ object Embeddings {
   private[operators] val PqD = 16
   private[operators] val PqK = 16
 
-  /** One deterministic [[kMeansModel]] codebook per subspace, trained on
-    * the sliced corpus. This is the EXPENSIVE step — PqS × iters full
-    * corpus passes — which is why the persisted path pays it once. */
   /** Run `body` on its own daemon thread; the returned thunk joins and
     * yields the result (rethrowing `body`'s failure). Spark's scheduler
     * happily runs jobs from several driver threads at once, and local
@@ -1455,7 +1452,11 @@ object Embeddings {
     () => { th.join(); out.fold(e => throw e, identity) }
   }
 
-  /** The 4 subspace codebooks train CONCURRENTLY (fork/join): each is an
+  /** One deterministic [[kMeansModel]] codebook per subspace, trained on
+    * the sliced corpus. This is the EXPENSIVE step — PqS × iters full
+    * corpus passes — which is why the persisted path pays it once.
+    *
+    * The 4 subspace codebooks train CONCURRENTLY (fork/join): each is an
     * independent chain of 4 tiny jobs (seed scan + 3 Lloyd rounds) whose
     * per-round collect round-trips dominate its wall-clock at every
     * corpus size (rows × 16 flops per round is nothing), so running the
@@ -1591,74 +1592,53 @@ object Embeddings {
   }
 
   /** Build-once PQ index: train the 4 codebooks and encode the corpus
-    * into THREE warehouse tables — `{table}_books` (s, cell, cv, cn:
-    * model-sized), `{table}_codes` (vec_id + 4 tinyint cell ids, bucketed
-    * on vec_id), `{table}_meta` (corpus fingerprint). If the stored
-    * fingerprint already matches the input, the build is SKIPPED entirely
-    * — "train rarely, encode once, serve from 4-byte codes" is the whole
-    * point of PQ at 100 TB, and the fingerprint probe is one map-side
-    * scan vs 12 full training passes. A mismatched or missing fingerprint
-    * (including the poison an [[appendToPqIndex]] leaves) always
-    * retrains. meta is dropped FIRST and rewritten LAST, so a crash
-    * mid-build can only leave a stale-fingerprint state that the next
-    * build repairs by retraining. */
-  def buildPqIndex(vectors: DataFrame, database: String, table: String): String = {
+    * into warehouse tables — `{table}_books` (s, cell, cv, cn:
+    * model-sized), `{table}_coarse` (the IVF coarse quantizer),
+    * `{table}_codes` (vec_id + 4 tinyint cell ids + coarse cell,
+    * bucketed on vec_id) — under a `{table}_meta` corpus fingerprint,
+    * through the shared [[graft.plans.PersistedIndex]] protocol. If the
+    * stored fingerprint already matches the input, the build is SKIPPED
+    * entirely — "train rarely, encode once, serve from 4-byte codes" is
+    * the whole point of PQ at 100 TB, and the fingerprint probe is one
+    * map-side scan vs 12 full training passes (decided from the
+    * warehouse LOCATION, so the skip works across sessions: a per-JVM
+    * skip retrained on every new session — measured 17.7 s vs 0.8 s at
+    * sf0.1). A mismatched or missing fingerprint (including the poison
+    * an [[appendToPqIndex]] leaves) always retrains. */
+  def buildPqIndex(vectors: DataFrame, table: String): String = {
     val s = vectors.sparkSession
     import s.implicits._
+    val P = graft.plans.PersistedIndex
     val prepared = vectors.select(col("vec_id").cast("long").as("vec_id"), col("v"))
     val (n, fp) = pqFingerprint(prepared)
-    // freshness is decided from the warehouse LOCATION, not the catalog:
-    // the in-memory catalog dies with the JVM while the files survive, and
-    // the skip must work across sessions (a per-JVM skip would retrain on
-    // every new session — measured 17.7 s vs 0.8 s at sf0.1)
-    val fresh =
-      try {
-        val meta = s.read.parquet(pqLoc(s, database, table, "_meta"))
-          .select($"n", $"fp").as[(Long, Long)].head()
-        val fs = new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_meta"))
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        meta == ((n, fp)) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_books"))) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_codes"))) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_coarse")))
-      } catch { case _: Exception => false }
-    if (!fresh) {
-      // physically invalidate meta FIRST (catalog drop alone leaves the
-      // files "valid" for a fresh JVM if this build crashes mid-rewrite)
-      graft.plans.CoLocated.clearTable(s, database, s"${table}_meta")
-      // the IVF half of an IVFADC index: the coarse quantizer (8 full-
-      // dim centroids) and each vector's nearest coarse cell persist
-      // WITH the codes, so cell-pruned serving (v18) reads no raw
-      // vector — the inverted-list assignment is part of the index,
-      // exactly as the codes are. Trained CONCURRENTLY with the 4
-      // subspace books (the [[fork]]/§2.6 overlap — a fifth independent
-      // Lloyd chain over the same immutable input).
-      val coarseJoin = fork("graft-pq-coarse")(kMeansModel(prepared, 8, 3))
-      val models = pqTrain(prepared)
-      val books = models.zipWithIndex.flatMap { case (m, si) =>
-        m.map { case (cell, cv, cn) => (si, cell, cv.toSeq, cn) }
-      }
-      graft.plans.CoLocated.replaceTable(
-        books.toDF("s", "cell", "cv", "cn"), database, s"${table}_books")
-      val coarse = coarseJoin()
-      graft.plans.CoLocated.replaceTable(
-        coarse.toSeq.map { case (cell, cv, cn) => (cell, cv.toSeq, cn) }
-          .toDF("cell", "cv", "cn"), database, s"${table}_coarse")
-      graft.plans.CoLocated.writeBucketed(
-        pqCodeRows(pqEncode(prepared, models, Some(coarse))),
-        database, s"${table}_codes", "vec_id", buckets = 16)
-      graft.plans.CoLocated.replaceTable(
-        Seq((n, fp)).toDF("n", "fp"), database, s"${table}_meta")
+    // Evaluated only when the ensure decides to build. The IVF half of
+    // an IVFADC index: the coarse quantizer (8 full-dim centroids) and
+    // each vector's nearest coarse cell persist WITH the codes, so
+    // cell-pruned serving (v18) reads no raw vector — the inverted-list
+    // assignment is part of the index, exactly as the codes are. Trained
+    // CONCURRENTLY with the 4 subspace books (the [[fork]]/§2.6 overlap
+    // — a fifth independent Lloyd chain over the same immutable input).
+    lazy val (models, coarseJoin) = {
+      val coarse = fork("graft-pq-coarse")(kMeansModel(prepared, 8, 3))
+      (pqTrain(prepared), coarse)
     }
-    s"$database.$table"
+    P.ensure(s, table, Seq("n" -> n, "fp" -> fp), force = false)(
+      P.table("_books")(models.zipWithIndex.flatMap { case (m, si) =>
+        m.map { case (cell, cv, cn) => (si, cell, cv.toSeq, cn) }
+      }.toDF("s", "cell", "cv", "cn")),
+      P.table("_coarse")(coarseJoin().toSeq.map { case (cell, cv, cn) =>
+        (cell, cv.toSeq, cn) }.toDF("cell", "cv", "cn")),
+      P.bucketed("_codes", "vec_id", buckets = 16)(
+        pqCodeRows(pqEncode(prepared, models, Some(coarseJoin())))))
+    s"${P.Database}.$table"
   }
 
   /** Read the persisted coarse quantizer back in [[kMeansModel]]'s
     * shape, ascending-cell order (the assignment tie order). */
-  private[operators] def pqReadCoarse(s: SparkSession, database: String,
+  private[operators] def pqReadCoarse(s: SparkSession,
       table: String): Array[(Long, Array[Double], Double)] = {
     import s.implicits._
-    s.read.parquet(pqLoc(s, database, table, "_coarse"))
+    s.read.parquet(graft.plans.PersistedIndex.location(s, table, "_coarse"))
       .select($"cell", $"cv", $"cn")
       .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
   }
@@ -1674,21 +1654,14 @@ object Embeddings {
     codes.select(cols: _*)
   }
 
-  /** Managed location of a PQ artifact table as a string path — the
-    * cross-JVM address of the persisted index (see [[graft.plans
-    * .CoLocated.tableLocation]]). */
-  private def pqLoc(s: SparkSession, database: String, table: String,
-      suffix: String): String =
-    graft.plans.CoLocated.tableLocation(s, database, table + suffix).toString
-
   /** Read the persisted codebooks back into [[pqEncode]]/[[pqAdc]]'s
     * model shape — sorted by cell within each subspace, restoring the
     * exact tie-break order the build used. Reads by location so it works
     * in sessions that never built the index. */
-  private[operators] def pqReadBooks(s: SparkSession, database: String,
+  private[operators] def pqReadBooks(s: SparkSession,
       table: String): Seq[Array[(Long, Array[Double], Double)]] = {
     import s.implicits._
-    val rows = s.read.parquet(pqLoc(s, database, table, "_books"))
+    val rows = s.read.parquet(graft.plans.PersistedIndex.location(s, table, "_books"))
       .select($"s", $"cell", $"cv", $"cn")
       .as[(Int, Long, Array[Double], Double)].collect()
     (0 until PqS).map { si =>
@@ -1700,19 +1673,19 @@ object Embeddings {
     * that is the production ingest path: codebooks change rarely, codes
     * append daily) and append them to the codes table without touching
     * resident files ([[graft.plans.CoLocated.appendBucketed]]). The
-    * stored fingerprint is poisoned (n = -1 can never match a real
-    * count) BEFORE the codes table mutates, so a later [[buildPqIndex]]
+    * stored fingerprint is poisoned ([[graft.plans.PersistedIndex.poison]])
+    * BEFORE the codes table mutates, so a later [[buildPqIndex]]
     * retrains instead of wrongly skipping over a corpus the codebooks
     * never saw — even if this append crashes mid-write. Appending needs the
     * codes table in THIS session's catalog (appendBucketed is a catalog
     * write) — same session-or-metastore caveat as [[appendToIndex]];
     * reads ([[queryPqIndex]]) and the build's freshness skip are
     * location-based and have no such constraint. */
-  def appendToPqIndex(vectors: DataFrame, database: String, table: String): String = {
+  def appendToPqIndex(vectors: DataFrame, table: String): String = {
     val s = vectors.sparkSession
-    import s.implicits._
+    val P = graft.plans.PersistedIndex
     val prepared = vectors.select(col("vec_id").cast("long").as("vec_id"), col("v"))
-    val models = pqReadBooks(s, database, table)
+    val models = pqReadBooks(s, table)
     // indexes persisted before the IVF half (no _coarse table / no
     // ccell column) cannot be appended to safely — appending rows WITH
     // a ccell into a codes table without one corrupts the layout, and
@@ -1725,31 +1698,24 @@ object Embeddings {
     // them as a migration prompt would steer an operator into a
     // needless 12-pass retrain for an index that only needed a retry
     val coarse =
-      try pqReadCoarse(s, database, table)
+      try pqReadCoarse(s, table)
       catch {
         case e @ (_: org.apache.spark.sql.AnalysisException |
                   _: java.io.FileNotFoundException) =>
           throw new IllegalStateException(
-            s"$database.$table has no persisted coarse quantizer — it predates " +
+            s"${P.Database}.$table has no persisted coarse quantizer — it predates " +
               "the IVF half of the index. Run buildPqIndex once to migrate " +
               "(the freshness probe requires _coarse and will retrain).", e)
       }
-    require(s.read.parquet(pqLoc(s, database, table, "_codes"))
+    require(s.read.parquet(P.location(s, table, "_codes"))
         .columns.contains("ccell"),
-      s"$database.$table codes table lacks the ccell column — rebuild with " +
+      s"${P.Database}.$table codes table lacks the ccell column — rebuild with " +
         "buildPqIndex before appending")
-    // poison BEFORE mutating codes — the same crash discipline as
-    // buildPqIndex (meta dropped first, rewritten last): if the append
-    // dies between the two steps the fingerprint is already invalid, so
-    // a later build retrains instead of fingerprint-matching a codes
-    // table this append half-mutated (append-then-poison left exactly
-    // that window)
-    graft.plans.CoLocated.replaceTable(
-      Seq((-1L, 0L)).toDF("n", "fp"), database, s"${table}_meta")
+    P.poison(s, table, Seq("n", "fp"))
     graft.plans.CoLocated.appendBucketed(
       pqCodeRows(pqEncode(prepared, models, Some(coarse))),
-      database, s"${table}_codes", "vec_id", buckets = 16)
-    s"$database.$table"
+      P.Database, s"${table}_codes", "vec_id", buckets = 16)
+    s"${P.Database}.$table"
   }
 
   /** Serve top-10 per query from a [[buildPqIndex]] table. The plan
@@ -1759,10 +1725,10 @@ object Embeddings {
     * (pinned in EmbeddingsSpec — the physical plan scans `{table}_codes`
     * and no embeddings parquet). */
   def queryPqIndex(s: SparkSession, queryRows: Array[(Long, Array[Double])],
-      database: String, table: String): DataFrame = {
+      table: String): DataFrame = {
     import s.implicits._
-    val models = pqReadBooks(s, database, table)
-    val codes = s.read.parquet(pqLoc(s, database, table, "_codes"))
+    val models = pqReadBooks(s, table)
+    val codes = s.read.parquet(graft.plans.PersistedIndex.location(s, table, "_codes"))
       .select($"vec_id",
         $"k0".cast("long").as("k0"), $"k1".cast("long").as("k1"),
         $"k2".cast("long").as("k2"), $"k3".cast("long").as("k3"))
@@ -1799,9 +1765,10 @@ object Embeddings {
   }
 
   /** Build-once BM25 inverted index: persist [[bm25ScoreTable]] as a
-    * term-bucketed warehouse table `{table}_postings` plus a
-    * `{table}_meta` corpus fingerprint — [[buildPqIndex]]'s exact
-    * discipline applied to the LEXICAL leg of hybrid retrieval. v16
+    * term-bucketed warehouse table `{table}_postings` under a
+    * `{table}_meta` corpus fingerprint — the shared
+    * [[graft.plans.PersistedIndex]] protocol applied to the LEXICAL leg
+    * of hybrid retrieval. v16
     * recomputes the corpus-wide tokenize → tf/df aggregation on every
     * call (the same per-call-cost smell the r6 verdict flagged for
     * v12's training, one scale rung down: one corpus pass instead of
@@ -1809,37 +1776,15 @@ object Embeddings {
     * matching fingerprint turns repeat builds into one map-side scan.
     * Input: (doc_id, text) — ALREADY restricted to the retrieval
     * universe (the fingerprint covers exactly that frame, so a changed
-    * universe — including changed embedding coverage — retrains). meta
-    * is dropped FIRST and rewritten LAST: a crash mid-build leaves a
-    * stale-fingerprint state the next build repairs by rebuilding. */
-  def buildBm25Index(docs: DataFrame, database: String, table: String): String = {
-    val s = docs.sparkSession
-    import s.implicits._
+    * universe — including changed embedding coverage — retrains). */
+  def buildBm25Index(docs: DataFrame, table: String): String = {
+    val P = graft.plans.PersistedIndex
     val prepared = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val (n, fp) = {
-      val (c, x) = prepared
-        .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"))
-        .as[(Long, Option[Long])].head()
-      (c, x.getOrElse(0L))
-    }
-    val fresh =
-      try {
-        val meta = s.read.parquet(pqLoc(s, database, table, "_meta"))
-          .select($"n", $"fp").as[(Long, Long)].head()
-        val fs = new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_meta"))
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        meta == ((n, fp)) &&
-          fs.exists(new org.apache.hadoop.fs.Path(pqLoc(s, database, table, "_postings")))
-      } catch { case _: Exception => false }
-    if (!fresh) {
-      graft.plans.CoLocated.clearTable(s, database, s"${table}_meta")
-      graft.plans.CoLocated.writeBucketed(
-        bm25ScoreTable(prepared.select($"doc_id", split($"text", " ").as("toks"))),
-        database, s"${table}_postings", "term", buckets = 16)
-      graft.plans.CoLocated.replaceTable(
-        Seq((n, fp)).toDF("n", "fp"), database, s"${table}_meta")
-    }
-    s"$database.$table"
+    val (n, fp) = docsFingerprint(prepared)
+    P.ensure(docs.sparkSession, table, Seq("n" -> n, "fp" -> fp), force = false)(
+      P.bucketed("_postings", "term", buckets = 16)(bm25ScoreTable(
+        prepared.select(col("doc_id"), split(col("text"), " ").as("toks")))))
+    s"${P.Database}.$table"
   }
 
   /** Serve per-query BM25 top-k from a [[buildBm25Index]] table. The
@@ -1851,11 +1796,11 @@ object Embeddings {
     * stored 1e-9-grid contributions — identical to summing the freshly
     * computed table. */
   def queryBm25Index(s: SparkSession, queryTerms: Array[(Long, String)],
-      database: String, table: String, k: Int): DataFrame = {
+      table: String, k: Int): DataFrame = {
     import s.implicits._
     val qterm = queryTerms.toSeq.toDF("query_id", "term")
     val wb = Window.partitionBy($"query_id").orderBy($"bm25".desc, $"doc_id")
-    s.read.parquet(pqLoc(s, database, table, "_postings"))
+    s.read.parquet(graft.plans.PersistedIndex.location(s, table, "_postings"))
       .join(broadcast(qterm), Seq("term"))
       .filter($"query_id" =!= $"doc_id")
       .groupBy($"query_id", $"doc_id")
@@ -2457,9 +2402,9 @@ object Embeddings {
         // [[adcRank]] tail runs partial agg under WindowGroupLimit.
         val table = "v15_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
         val base = based(s, dir)
-        Embeddings.buildPqIndex(base, "graft_index", table)
-        val books = pqReadBooks(s, "graft_index", table)
-        val coarse = pqReadCoarse(s, "graft_index", table)
+        Embeddings.buildPqIndex(base, table)
+        val books = pqReadBooks(s, table)
+        val coarse = pqReadCoarse(s, table)
         val queryRows = base.filter($"vec_id" < 10)
           .as[(Long, Array[Double])].collect()
         // probe selection under the trainer's (cosine desc, cell asc)
@@ -2476,7 +2421,7 @@ object Embeddings {
         }.toSeq
         val dtDF = broadcast(pqAdc(queryRows, books).toDF("query_id", "s", "cell", "d"))
         val probeDF = broadcast(probes.toDF("query_id", "ccell"))
-        val codes = s.read.parquet(pqLoc(s, "graft_index", table, "_codes"))
+        val codes = s.read.parquet(graft.plans.PersistedIndex.location(s, table, "_codes"))
           .select($"vec_id",
             $"k0".cast("long").as("k0"), $"k1".cast("long").as("k1"),
             $"k2".cast("long").as("k2"), $"k3".cast("long").as("k3"),
@@ -2761,12 +2706,12 @@ object Embeddings {
           .withColumn("nrm", expr(NormSql))
         val docsText = tbl(s, dir, "documents").select($"doc_id", $"text")
           .join(base.select($"vec_id".as("doc_id")), Seq("doc_id"), "left_semi")
-        Embeddings.buildBm25Index(docsText, "graft_index", table)
+        Embeddings.buildBm25Index(docsText, table)
         val qterms = docsText.filter($"doc_id" < 10)
           .select($"doc_id".as("query_id"),
             explode(array_distinct(split($"text", " "))).as("term"))
           .as[(Long, String)].collect()
-        val lex = Embeddings.queryBm25Index(s, qterms, "graft_index", table, K)
+        val lex = Embeddings.queryBm25Index(s, qterms, table, K)
         val qv = base.filter($"vec_id" < 10)
           .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
         val wv = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"doc_id")
@@ -3278,9 +3223,9 @@ object Embeddings {
         // discipline), so each SF keeps its own index.
         val table = "v15_" + dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
         val base = based(s, dir)
-        Embeddings.buildPqIndex(base, "graft_index", table)
+        Embeddings.buildPqIndex(base, table)
         val queryRows = base.filter($"vec_id" < 10).as[(Long, Array[Double])].collect()
-        Embeddings.queryPqIndex(s, queryRows, "graft_index", table)
+        Embeddings.queryPqIndex(s, queryRows, table)
           .orderBy($"query_id", $"rnk")
       },
       Some(PqOracleSql)),

@@ -660,7 +660,7 @@ object Multimodal {
 
   /** Shared build body for the dir-keyed and frame-keyed ensures —
     * verified pairs in `_pairs` plus the per-representative signature
-    * history in the `_sigs` aux (what [[appendToMediaIndex]] probes). */
+    * history in `_sigs` (what [[appendToMediaIndex]] probes). */
   private def mediaBuild(s: SparkSession, docs: DataFrame, table: String,
       meta: Seq[(String, Long)], force: Boolean, maxBandBucket: Long): String = {
     // Evaluated only when the ensure decides to BUILD:
@@ -677,16 +677,18 @@ object Multimodal {
       // collapse + hash pipeline executes once per consumer
       graft.CacheRegistry.retain("media.phash", phashSigsOf(docs))
     }
-    graft.plans.PersistedIndex.ensureWith(s, table, meta, force,
+    val P = graft.plans.PersistedIndex
+    P.ensure(s, table, meta, force)(
+      P.table("_pairs")(phashVerify(hashed, maxBandBucket, "build")),
+      P.table("_sigs")(hashed),
       // _prof persists the band-bucket occupancy profile (bi, bv, cnt —
       // ≤ 8·256 rows) so the APPEND can gate the merged corpus from a
       // profile MERGE (stored + delta counts; exact, since absorption
       // guarantees rep disjointness) instead of re-profiling the whole
       // resident history per append — the corpus-proportional piece of
       // m09's bookkeeping floor (r18 verdict #6)
-      aux = Seq("_sigs" -> (() => hashed),
-        "_prof" -> (() => bandProfile(hashed))))(
-      phashVerify(hashed, maxBandBucket, "build"))
+      P.table("_prof")(bandProfile(hashed)))
+    P.location(s, table, "_pairs")
   }
 
   /** Incremental append for the persisted media index —
@@ -726,23 +728,12 @@ object Multimodal {
     // same plan-match staleness class as the build: the delta's hash
     // plan could substitute a warm pre-rewrite cache entry
     graft.CacheRegistry.release("media.phash")
-    val stored =
-      try s.read.parquet(P.location(s, table, "_meta"))
-        .select(base.map(m => col(m._1)): _*).head()
-      catch {
-        case e @ (_: org.apache.spark.sql.AnalysisException |
-                  _: java.util.NoSuchElementException) =>
-          throw new IllegalStateException(
-            s"graft_index.$table has no readable _meta with the appendable " +
-              "layout (n, fp, gate, maxid) — nothing verified to append to. " +
-              "Run ensureMediaIndex to build/migrate first.", e)
-      }
-    require(base.indices.forall(i => stored.getLong(i) == base(i)._2),
-      s"appendToMediaIndex($table): resident _meta " +
-        s"(${base.map(_._1).zipWithIndex.map { case (n, i) => s"$n=${stored.getLong(i)}" }.mkString(", ")}) " +
-        s"does not match the expected base (${base.map { case (n, v) => s"$n=$v" }.mkString(", ")}) " +
-        "— the index is poisoned, mid-append, or built from a different " +
-        "corpus/gate. Run ensureMediaIndex to rebuild instead.")
+    P.requireBase(s, table, base, "appendToMediaIndex",
+      unreadable = s"graft_index.$table has no readable _meta with the " +
+        "appendable layout (n, fp, gate, maxid) — nothing verified to append " +
+        "to. Run ensureMediaIndex to build/migrate first.",
+      mismatch = "— the index is poisoned, mid-append, or built from a " +
+        "different corpus/gate. Run ensureMediaIndex to rebuild instead.")
     val baseMaxId = base.collectFirst { case ("maxid", v) => v }.getOrElse(
       throw new IllegalArgumentException(
         s"appendToMediaIndex($table): base meta carries no maxid — build with " +
@@ -793,13 +784,7 @@ object Multimodal {
           s"index's verified gate is $baseGate — the append cannot change " +
           "the gate contract; rebuild with ensureMediaIndex to re-gate")
     }
-    def diag[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("SPARK_GRAFT_DIAG"))
-        println(f"[mappend-diag] $tag: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
+    def diag[A](stage: String)(f: => A): A = graft.util.Timed.diag("mappend-diag", stage)(f)
     val newSigs = diag("newSigs (decode+collapse+hash delta)")(
       phashSigsOf(newDocs).localCheckpoint())
     try {

@@ -17,4 +17,13 @@ object Timed {
         throw e
     }
   }
+
+  private val DiagOn = sys.env.contains("SPARK_GRAFT_DIAG")
+
+  /** Stage timing gated on `SPARK_GRAFT_DIAG` — the internal attribution
+    * of the index append paths that `ProbeCells appendsplit` runs read:
+    * when the variable is set, `stage` is timed as above and printed as
+    * `[<tag>] <stage> took …` on stdout; otherwise `f` runs untimed. */
+  def diag[T](tag: String, stage: String)(f: => T): T =
+    if (DiagOn) apply(stage, msg => println(s"[$tag] $msg"))(f) else f
 }

@@ -399,7 +399,7 @@ class EmbeddingsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val queryRows = vecs.filter(col("vec_id") < 10)
       .as[(Long, Array[Double])].collect()
-    val serve = Embeddings.queryPqIndex(spark, queryRows, "graft_index", table)
+    val serve = Embeddings.queryPqIndex(spark, queryRows, table)
     // inspect the actual scan relations (the plan STRING truncates long
     // file paths): every file scan in the serve plan must be the
     // persisted code table — which simultaneously proves no raw-corpus
@@ -420,15 +420,15 @@ class EmbeddingsSpec extends SparkSpec {
     val tables = Seq(s"${table}_books", s"${table}_codes", s"${table}_meta")
     val before = pqListFiles(tables)
     assert(before.nonEmpty)
-    Embeddings.buildPqIndex(vecs, "graft_index", table)
+    Embeddings.buildPqIndex(vecs, table)
     assert(pqListFiles(tables) == before,
       "matching-fingerprint rebuild must not touch the persisted index")
     // a CHANGED corpus must invalidate the skip and rewrite the index
-    Embeddings.buildPqIndex(vecs.filter(col("vec_id") % 2 === 0), "graft_index", table)
+    Embeddings.buildPqIndex(vecs.filter(col("vec_id") % 2 === 0), table)
     assert(pqListFiles(tables) != before,
       "a different corpus must retrain — the fingerprint may not false-match")
     // restore the full-corpus index for any later test/catalog run
-    Embeddings.buildPqIndex(vecs, "graft_index", table)
+    Embeddings.buildPqIndex(vecs, table)
   }
 
   test("v19 persisted BM25: equals v16; lex serve scans only the posting table; rebuild skips") {
@@ -446,7 +446,7 @@ class EmbeddingsSpec extends SparkSpec {
     // scan, no tokenize, no tf/df aggregation (those jobs read
     // documents.parquet, which this plan provably cannot)
     val table = "v19_" + sf.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-    val lex = Embeddings.queryBm25Index(spark, Array((0L, "the")), "graft_index", table, 60)
+    val lex = Embeddings.queryBm25Index(spark, Array((0L, "the")), table, 60)
     val scans = lex.queryExecution.optimizedPlan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
@@ -466,16 +466,16 @@ class EmbeddingsSpec extends SparkSpec {
     val tables = Seq(s"${table}_postings", s"${table}_meta")
     val before = pqListFiles(tables)
     assert(before.nonEmpty)
-    Embeddings.buildBm25Index(docsText, "graft_index", table)
+    Embeddings.buildBm25Index(docsText, table)
     assert(pqListFiles(tables) == before,
       "matching-fingerprint rebuild must not touch the persisted index")
     // a CHANGED corpus must invalidate the skip and rewrite the index
     Embeddings.buildBm25Index(
-      docsText.filter(col("doc_id") % 2 === 0), "graft_index", table)
+      docsText.filter(col("doc_id") % 2 === 0), table)
     assert(pqListFiles(tables) != before,
       "a changed corpus must rebuild — the fingerprint may not false-match")
     // restore the full-universe index for any later test/catalog run
-    Embeddings.buildBm25Index(docsText, "graft_index", table)
+    Embeddings.buildBm25Index(docsText, table)
   }
 
   test("appendToPqIndex: encodes with the persisted codebooks, adds files only, poisons the fingerprint") {
@@ -485,12 +485,12 @@ class EmbeddingsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val head = vecs.filter(col("vec_id") % 3 =!= 0)
     val tail = vecs.filter(col("vec_id") % 3 === 0)
-    Embeddings.buildPqIndex(head, "graft_index", "v15incr")
+    Embeddings.buildPqIndex(head, "v15incr")
     // _coarse is resident state too: an append that rewrote the coarse
     // quantizer would silently re-cell the whole corpus
     val tables = Seq("v15incr_books", "v15incr_codes", "v15incr_coarse")
     val before = pqListFiles(tables)
-    Embeddings.appendToPqIndex(tail, "graft_index", "v15incr")
+    Embeddings.appendToPqIndex(tail, "v15incr")
     val after = pqListFiles(tables)
     val touched = before.filter { case (p, meta) => after.get(p) != Some(meta) }
     assert(touched.isEmpty, s"append modified resident files: ${touched.keys}")
@@ -512,7 +512,7 @@ class EmbeddingsSpec extends SparkSpec {
     // including the head slice the fingerprint once matched — retrains
     // rather than serving codes its books never saw
     val poisoned = pqListFiles(Seq("v15incr_meta"))
-    Embeddings.buildPqIndex(head, "graft_index", "v15incr")
+    Embeddings.buildPqIndex(head, "v15incr")
     assert(pqListFiles(Seq("v15incr_meta")) != poisoned,
       "post-append build must retrain (rewrite meta), not fingerprint-skip")
     Seq("v15incr_books", "v15incr_codes", "v15incr_coarse", "v15incr_meta")

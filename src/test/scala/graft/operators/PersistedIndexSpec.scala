@@ -282,7 +282,7 @@ class PersistedIndexSpec extends SparkSpec {
     // a pre-aux artifact: pairs + meta written by the OLD protocol (no
     // _sigs) — exactly what a pre-r13 build left on disk
     P.ensure(spark, "apx_oldlayout", Seq("n" -> bm._1, "fp" -> bm._2),
-      force = true)(Seq((0L, 1L, 0L)).toDF("doc_a", "doc_b", "hamming"))
+      force = true)(P.table("_pairs")(Seq((0L, 1L, 0L)).toDF("doc_a", "doc_b", "hamming")))
     val e = intercept[IllegalStateException] {
       Documents.appendToSimhashIndex(spark, delta, "apx_oldlayout", bm, gm)
     }
@@ -439,7 +439,7 @@ class PersistedIndexSpec extends SparkSpec {
     // pre-appendable layout (no maxid in _meta, no _sigs): the probe
     // can't verify the order contract — refuse with the migration hint
     P.ensure(spark, "mapx_old", Seq("n" -> 4L, "fp" -> 7L, "gate" -> 65536L),
-      force = true)(Seq((0L, 1L, 0L)).toDF("doc_a", "doc_b", "hamming"))
+      force = true)(P.table("_pairs")(Seq((0L, 1L, 0L)).toDF("doc_a", "doc_b", "hamming")))
     val e3 = intercept[IllegalStateException] {
       Multimodal.appendToMediaIndex(spark, high, "mapx_old",
         Seq("n" -> 4L, "fp" -> 7L, "gate" -> 65536L, "maxid" -> 3L),
@@ -469,5 +469,153 @@ class PersistedIndexSpec extends SparkSpec {
       Set(a, b).subsetOf(Set(0L, 1L, 9L)) },
       "disjoint-vocabulary docs must not pair")
     graft.CacheRegistry.unpersistAll()
+  }
+
+  // ---- crash ordering, proven by fault injection ------------------------
+  // ensure takes each artifact's writer as an argument, so a test can hand
+  // it one that throws at any write step: no production hook needed.
+
+  private final class InjectedFault extends RuntimeException("injected write fault")
+
+  /** One artifact per layout ensure writes (catalog table, path-addressed,
+    * bucketed), with contents keyed by `v` so two builds are told apart. */
+  private def artifacts(v: Long): Seq[graft.plans.PersistedIndex.Artifact] = {
+    val P = graft.plans.PersistedIndex
+    Seq(
+      P.table("_pairs")(Seq((0L, 1L, v)).toDF("doc_a", "doc_b", "hamming")),
+      P.path(spark, "_sigs")(Seq((0L, v), (1L, v + 1)).toDF("doc_id", "simhash")),
+      P.bucketed("_codes", "vec_id", buckets = 4)(Seq((0L, v), (1L, v)).toDF("vec_id", "k0")))
+  }
+
+  private def contents(table: String): Map[String, Set[Seq[Any]]] =
+    artifacts(0L).map { a =>
+      a.suffix -> spark.read.parquet(
+        graft.plans.PersistedIndex.location(spark, table, a.suffix))
+        .collect().map(_.toSeq).toSet
+    }.toMap
+
+  test("ensure: a fault at any write step leaves a state the next ensure rebuilds cleanly") {
+    val P = graft.plans.PersistedIndex
+    val oldMeta = Seq("n" -> 1L, "fp" -> 11L)
+    val newMeta = Seq("n" -> 2L, "fp" -> 22L)
+    assert(P.ensure(spark, "fault_clean_old", oldMeta, force = false)(artifacts(1L): _*))
+    assert(P.ensure(spark, "fault_clean_new", newMeta, force = false)(artifacts(2L): _*))
+    val cleanOld = contents("fault_clean_old")
+    val cleanNew = contents("fault_clean_new")
+    assert(cleanOld != cleanNew)
+    val n = artifacts(2L).size
+    // step k < n: writers before k land, writer k throws before writing;
+    // step n: every writer lands and the last throws after its write —
+    // the window between the final artifact and the stamp
+    for (k <- 0 to n) {
+      val table = s"fault_step$k"
+      P.ensure(spark, table, oldMeta, force = false)(artifacts(1L): _*)
+      val faulty = artifacts(2L).zipWithIndex.map { case (a, i) =>
+        if (i == k) P.Artifact(a.suffix, _ => throw new InjectedFault)
+        else if (k == n && i == n - 1)
+          P.Artifact(a.suffix, name => { a.write(name); throw new InjectedFault })
+        else a
+      }
+      intercept[InjectedFault] {
+        P.ensure(spark, table, newMeta, force = false)(faulty: _*)
+      }
+      // the old stamp was invalidated FIRST: even the tuple the artifacts
+      // were last fully built under no longer reads fresh over them
+      assert(P.ensure(spark, table, oldMeta, force = false)(artifacts(1L): _*),
+        s"step $k: the interrupted build must not leave the old stamp fresh")
+      assert(contents(table) == cleanOld, s"step $k: rebuild must equal a clean build")
+      intercept[InjectedFault] {
+        P.ensure(spark, table, newMeta, force = false)(faulty: _*)
+      }
+      assert(P.ensure(spark, table, newMeta, force = false)(artifacts(2L): _*),
+        s"step $k: the next good ensure must rebuild")
+      assert(contents(table) == cleanNew, s"step $k: rebuild must equal a clean build")
+      assert(!P.ensure(spark, table, newMeta, force = false)(artifacts(2L): _*),
+        s"step $k: the repaired index must read fresh")
+    }
+  }
+
+  test("append window: a fault after poison, after the _pairs append, or before the stamp") {
+    graft.CacheRegistry.unpersistAll()
+    val P = graft.plans.PersistedIndex
+    val base = baseDocs.toDF("doc_id", "text")
+    val delta = deltaDocs.toDF("doc_id", "text")
+    val bm = graft.QueryHelpers.docsFingerprint(base)
+    val gm = graft.QueryHelpers.docsFingerprint(base.unionByName(delta))
+    val meta = Seq("n" -> bm._1, "fp" -> bm._2)
+    val cleanLoc = Documents.ensureSimhashIndexFor(spark, base, "apx_win_clean", meta,
+      force = true)
+    val clean = spark.read.parquet(cleanLoc).as[(Long, Long, Long)].collect().toSet
+    // the append's write sequence up to the stamp: poison, _pairs, _sigs
+    val steps: Seq[String => Unit] = Seq(
+      t => P.poison(spark, t, meta.map(_._1)),
+      t => P.appendTable(Seq((0L, 10L, 0L)).toDF("doc_a", "doc_b", "hamming"), t, "_pairs"),
+      t => {
+        val sigs = spark.read.parquet(P.location(spark, t, "_sigs"))
+        P.appendTable(spark.createDataFrame(sigs.limit(1).collectAsList(), sigs.schema),
+          t, "_sigs")
+      })
+    for (w <- 1 to steps.size) {
+      val table = s"apx_win$w"
+      Documents.ensureSimhashIndexFor(spark, base, table, meta, force = true)
+      steps.take(w).foreach(_(table))
+      // a retried append meets the poison sentinel in the shared base check
+      val e = intercept[IllegalArgumentException] {
+        Documents.appendToSimhashIndex(spark, delta, table, bm, gm)
+      }
+      assert(e.getMessage.contains("does not match the expected base"))
+      // the next ensure rebuilds: the half-appended rows are gone and the
+      // base stamp is back, so the base check passes again
+      val loc = Documents.ensureSimhashIndexFor(spark, base, table, meta)
+      assert(spark.read.parquet(loc).as[(Long, Long, Long)].collect().toSet == clean,
+        s"window $w: the rebuild must equal a clean build")
+      P.requireBase(spark, table, meta, "spec", "unreadable", "mismatch")
+    }
+    graft.CacheRegistry.unpersistAll()
+  }
+
+  // ---- PQ on the shared protocol -----------------------------------------
+
+  /** 90 distinct 64-dim vectors — the PQ geometry's 4 × 16-dim subspaces. */
+  private def pqVecs = (0 until 90).map { i =>
+    (i.toLong, Array.tabulate(64)(d => ((i * 31 + d * 17) % 97) / 97.0 - 0.5))
+  }.toDF("vec_id", "v")
+
+  private def pqSnapshot(table: String, suffixes: Seq[String]): Map[String, (Long, String)] =
+    suffixes.flatMap { sfx =>
+      fileSnapshot(graft.plans.PersistedIndex.location(spark, table, sfx))
+        .map { case (rel, sig) => s"$sfx/$rel" -> sig }
+    }.toMap
+
+  test("buildPqIndex: an unreadable _meta propagates instead of retraining over the index") {
+    val P = graft.plans.PersistedIndex
+    Embeddings.buildPqIndex(pqVecs, "pq_corrupt")
+    // a non-parquet file in _meta — a torn or foreign write. Larger than
+    // the real meta file so the scan reads it first.
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(new java.net.URI(P.location(spark, "pq_corrupt", "_meta")).getPath,
+        "part-00000-planted.parquet"),
+      Array.fill[Byte](8192)(7))
+    val artifacts = Seq("_books", "_codes", "_coarse")
+    val before = pqSnapshot("pq_corrupt", artifacts)
+    assert(before.nonEmpty)
+    intercept[Exception] { Embeddings.buildPqIndex(pqVecs, "pq_corrupt") }
+    assert(pqSnapshot("pq_corrupt", artifacts) == before,
+      "a read fault must not trigger the destructive retrain")
+  }
+
+  test("buildPqIndex serves an index whose _meta an older build wrote by catalog CTAS") {
+    val P = graft.plans.PersistedIndex
+    Embeddings.buildPqIndex(pqVecs, "pq_oldmeta")
+    // re-stamp _meta the way the former PQ build did: a catalog CTAS of (n, fp)
+    val stored = spark.read.parquet(P.location(spark, "pq_oldmeta", "_meta"))
+      .select($"n", $"fp").as[(Long, Long)].head()
+    graft.plans.CoLocated.replaceTable(Seq(stored).toDF("n", "fp"),
+      P.Database, "pq_oldmeta_meta")
+    val all = Seq("_books", "_codes", "_coarse", "_meta")
+    val before = pqSnapshot("pq_oldmeta", all)
+    Embeddings.buildPqIndex(pqVecs, "pq_oldmeta")
+    assert(pqSnapshot("pq_oldmeta", all) == before,
+      "an index stamped by the former PQ build must be served without a rebuild")
   }
 }
